@@ -76,7 +76,12 @@ def _validate_path(fn_name: str, path: tuple):
                 "JSON using an array."
             )
         return None, path[0]
-    out = []
+    return _literal_path(fn_name, path), None
+
+
+def _literal_path(fn_name: str, path) -> tuple:
+    """``path`` as a tuple of str/int literals; raises ValueError with
+    the reference's wording for any other element (a Column included)."""
     for i, p in enumerate(path):
         if p is None:
             # reference: tests/main.rs:291-298 (plan-time error)
@@ -90,8 +95,7 @@ def _validate_path(fn_name: str, path: tuple):
                 f"{i + 2}, expected string or int, got "
                 f"{type(p).__name__}."
             )
-        out.append(p)
-    return tuple(out), None
+    return tuple(path)
 
 
 def _coerce_json_arg(json):

@@ -34,6 +34,7 @@ observable behavior as the reference's event parser).
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 from json.decoder import scanstring
@@ -103,8 +104,6 @@ try:  # pragma: no cover - environment-dependent
 
     _IS_ORJSON = True
 except ImportError:  # pragma: no cover
-    import functools
-
     _loads = functools.partial(
         json.loads, parse_constant=_reject_nonfinite_token
     )
@@ -117,6 +116,7 @@ except ImportError:  # pragma: no cover
 # take the streaming-scanner path. Digits inside string values
 # over-trigger; that's a conservative fallback, never a wrong answer.
 _BIG_DIGITS = re.compile(r"[0-9]{19}")
+_big_digits = _BIG_DIGITS.search if _IS_ORJSON else None
 
 def _raw_decode(s: str, i: int):
     """C-accelerated ``JSONDecoder.raw_decode`` with a process-local
@@ -276,69 +276,37 @@ def find(s, path):
         return MISSING, None
 
 
-def find_scalar(s, path):
-    """Fast twin of :func:`find` for consumers that never need raw
-    container slices (``json_get_str/int/float/bool``, ``json_contains``,
-    the to_text/is_null fusions).
-
-    Strategy: one C-speed ``json.loads`` + native dict/list walk — ~2-3×
-    faster than the streaming scan on typical documents because the whole
-    tokenize/skip loop runs inside the C decoder instead of Python. The
-    walk is only equivalent to the streaming first-match scan when object
-    keys are unique, so a cheap textual guard falls back to :func:`find`
-    whenever equivalence can't be proven from the raw text:
-
-    * any ``\\`` in the document (escapes could hide a duplicate key from
-      the textual check), or
-    * any string path key occurring more than once as a quoted token
-      (conservative: a hit inside a string *value* also falls back).
-
-    With no backslashes, decoded key text == raw key text, so counting
-    ``"key"`` occurrences bounds the number of members with that name
-    anywhere in the document. Trailing garbage / invalid JSON also falls
-    back (``loads`` raises; the streaming scan may still find the value —
-    reference never-throw contract, src/common.rs:559-578).
-
-    Returns ``(kind, value)`` like :func:`find`, EXCEPT that ARRAY/OBJECT
-    values are the *parsed* ``list``/``dict`` (not the raw text slice) —
-    callers needing raw fidelity must re-run :func:`find` for those rows.
-    """
-    if s is None:
-        return MISSING, None
-    if not isinstance(s, str):
-        # never-throw contract: a non-string document (int column fed
-        # to a getter, boolean from a rewritten `?`) must yield MISSING
-        # like :func:`find`, not a TypeError that kills the task on the
-        # `in`/`count` guards below
-        return MISSING, None
-    if "\\" in s:
-        return find(s, path)
+def _compile_path(path):
+    """Walk ops ``((is_key, elem), ...)`` for ``path``, or None when the
+    path misses on every row: null / bool / negative / non-int elements
+    (reference: src/common.rs:118-127, src/common.rs:90-97)."""
+    ops = []
     for p in path:
-        if isinstance(p, str) and s.count('"%s"' % p) > 1:
-            return find(s, path)
-    if _IS_ORJSON and _BIG_DIGITS.search(s) is not None:
-        return find(s, path)
+        if p is None or isinstance(p, bool):  # bool is an int subclass
+            return None
+        if isinstance(p, str):
+            ops.append((True, p))
+            continue
+        try:
+            i = int(p)
+        except (TypeError, ValueError):
+            return None
+        if i < 0:
+            return None
+        ops.append((False, i))
+    return tuple(ops)
+
+
+def _walk(doc, ops):
+    """``(kind, value)`` at compiled ``ops`` inside a PARSED document —
+    the typed dict/list walk every parse-once consumer shares. ARRAY/
+    OBJECT values are the parsed ``list``/``dict``, not raw slices."""
     try:
-        doc = _loads(s)
-    except Exception:
-        return find(s, path)
-    try:
-        for p in path:
-            if p is None:
+        for is_key, p in ops:
+            if type(doc) is not (dict if is_key else list):
                 return MISSING, None
-            if isinstance(p, str):
-                if type(doc) is dict:
-                    doc = doc[p]  # KeyError -> MISSING
-                else:
-                    return MISSING, None
-            elif isinstance(p, bool):  # guard: bool is an int subclass
-                return MISSING, None
-            else:
-                i = int(p)
-                if i < 0 or type(doc) is not list:
-                    return MISSING, None
-                doc = doc[i]  # IndexError -> MISSING
-    except (KeyError, IndexError, TypeError, ValueError):
+            doc = doc[p]  # KeyError / IndexError -> MISSING
+    except (KeyError, IndexError):
         return MISSING, None
     if doc is None:
         return NULL, None
@@ -356,161 +324,102 @@ def find_scalar(s, path):
     return OBJECT, doc
 
 
+def _parse_walk(path, ops, s):
+    """One C-speed ``loads`` + :func:`_walk`; a document the strict
+    parser rejects (trailing garbage, invalid JSON) goes to the
+    streaming scan, which may still find the value (reference
+    never-throw contract, src/common.rs:559-578)."""
+    try:
+        doc = _loads(s)
+    except Exception:
+        return find(s, path)
+    return _walk(doc, ops)
+
+
+def _guarded(path, ops, needles, big, s):
+    """The guarded lookup: parse + walk only where that provably equals
+    the streaming first-match scan, else :func:`find`. Guards, in order:
+
+    * a non-string document (int column fed to a getter, boolean from a
+      rewritten ``?``) is MISSING, never a TypeError that kills the task;
+    * any ``\\`` in the document — escapes could hide a duplicate key
+      from the textual check;
+    * any path key occurring more than once as a quoted token
+      (conservative: a hit inside a string *value* also falls back).
+      With no backslashes, decoded key text == raw key text, so
+      counting ``"key"`` bounds the members with that name;
+    * a 19-digit run (``big``), which orjson may turn into a lossy
+      float (see ``_BIG_DIGITS``)."""
+    if not isinstance(s, str):
+        return MISSING, None
+    if "\\" in s:
+        return find(s, path)
+    for nd in needles:
+        if s.count(nd) > 1:
+            return find(s, path)
+    if big is not None and big(s) is not None:
+        return find(s, path)
+    return _parse_walk(path, ops, s)
+
+
 def _constant_missing(_s):
     return MISSING, None
 
 
-def make_find_scalar(path):
-    """Specialized :func:`find_scalar` for a CONSTANT path — the
-    literal-path UDF shape, which dominates real workloads. The per-path
-    work ``find_scalar`` re-derives on every row (guard needles via
-    ``'"%s"' % p`` formatting, isinstance dispatch, negative-index
-    checks) is precompiled once per batch; rows then pay only the
-    guards, one C-speed ``loads``, and a typed walk. Behavior is
-    row-for-row identical to ``find_scalar(s, path)``
-    (hypothesis-differential pinned in tests/test_property.py)."""
-    path = tuple(path)
-    ops = []
-    for p in path:
-        # constant-MISSING paths: null / bool / negative / non-int
-        # elements miss on every row (reference: src/common.rs:118-127)
-        if p is None or isinstance(p, bool):
-            return _constant_missing
-        if isinstance(p, str):
-            ops.append((True, p))
-        else:
-            try:
-                i = int(p)
-            except (TypeError, ValueError):
-                return _constant_missing
-            if i < 0:
-                return _constant_missing
-            ops.append((False, i))
-    needles = tuple('"%s"' % p for is_key, p in ops if is_key)
-    fallback = find
-    loads = _loads
-    big = _BIG_DIGITS.search if _IS_ORJSON else None
-
-    def find_scalar_const(s):
-        if s is None:
-            return MISSING, None
-        if "\\" in s:
-            return fallback(s, path)
-        for nd in needles:
-            if s.count(nd) > 1:
-                return fallback(s, path)
-        if big is not None and big(s) is not None:
-            return fallback(s, path)
-        try:
-            doc = loads(s)
-        except Exception:
-            return fallback(s, path)
-        try:
-            for is_key, p in ops:
-                if is_key:
-                    if type(doc) is dict:
-                        doc = doc[p]  # KeyError -> MISSING
-                    else:
-                        return MISSING, None
-                else:
-                    if type(doc) is not list:
-                        return MISSING, None
-                    doc = doc[p]  # IndexError -> MISSING
-        except (KeyError, IndexError):
-            return MISSING, None
-        if doc is None:
-            return NULL, None
-        if doc is True or doc is False:
-            return BOOL, doc
-        t = type(doc)
-        if t is int:
-            return INT, doc
-        if t is float:
-            return FLOAT, doc
-        if t is str:
-            return STR, doc
-        if t is list:
-            return ARRAY, doc
-        return OBJECT, doc
-
-    return find_scalar_const
-
-
 def guard_needles(path) -> tuple:
-    """The quoted-key needles :func:`make_find_scalar`'s duplicate-key
-    guard counts for ``path`` — exposed so the batch-vectorized guard
+    """The quoted-key needles the duplicate-key guard counts for
+    ``path`` — exposed so the batch-vectorized guard
     (kernels._fast_mask) tests EXACTLY the same conditions."""
-    return tuple(
-        '"%s"' % p for p in path if isinstance(p, str) and not isinstance(p, bool)
+    return tuple('"%s"' % p for p in path if isinstance(p, str))
+
+
+def find_scalar(s, path):
+    """Fast twin of :func:`find` for consumers that never need raw
+    container slices (``json_get_str/int/float/bool``, ``json_contains``,
+    the to_text/is_null fusions): one C-speed ``loads`` + native
+    dict/list walk — ~2-3× faster than the streaming scan on typical
+    documents — behind the textual guards of :func:`_guarded`.
+
+    Returns ``(kind, value)`` like :func:`find`, EXCEPT that ARRAY/OBJECT
+    values are the *parsed* ``list``/``dict`` (not the raw text slice) —
+    callers needing raw fidelity must re-run :func:`find` for those rows.
+    """
+    ops = _compile_path(path)
+    if ops is None:
+        return MISSING, None
+    return _guarded(path, ops, guard_needles(path), _big_digits, s)
+
+
+def make_find_scalar(path):
+    """:func:`find_scalar` for a CONSTANT path — the literal-path UDF
+    shape, which dominates real workloads: the path compiles and the
+    guard needles format once, rows pay only the guards, one ``loads``
+    and the walk."""
+    path = tuple(path)
+    ops = _compile_path(path)
+    if ops is None:
+        return _constant_missing
+    return functools.partial(
+        _guarded, path, ops, guard_needles(path), _big_digits
     )
 
 
 def make_fast_walk(path):
-    """The GUARDS-PASSED arm of :func:`make_find_scalar` alone: one
-    C-speed ``loads`` + typed walk, with the same parse-failure fallback
-    to the streaming scanner. Callers must only invoke it on rows a
-    guard check (textual or the batch-vectorized ``kernels._fast_mask``)
-    has already cleared — rows with escapes or duplicated path keys
-    belong to :func:`make_find_scalar` / :func:`find`.
+    """The GUARDS-PASSED arm of :func:`make_find_scalar` alone: parse +
+    walk with the parse-failure fallback. Callers must only invoke it
+    on string rows the batch-vectorized guard (``kernels._fast_mask``)
+    has already cleared.
 
     NOTE on the big-digit guard: when the mask skipped the 19-digit
     check (``check_big=False``), an out-of-range integer reaches orjson
-    and comes back as INT (within u64) or a lossy FLOAT (outside) — the
-    per-kernel equivalence proofs in kernels._scalar_pairs document why
-    the five scalar getters produce identical results either way."""
+    and comes back as INT (within u64) or a lossy FLOAT (outside) —
+    kernels.OBSERVES_BIG names the coercions that can tell the two
+    apart."""
     path = tuple(path)
-    for p in path:
-        if p is None or isinstance(p, bool):
-            return _constant_missing
-        if not isinstance(p, str):
-            try:
-                i = int(p)
-            except (TypeError, ValueError):
-                return _constant_missing
-            if i < 0:
-                return _constant_missing
-    ops = tuple(
-        (True, p) if isinstance(p, str) else (False, int(p)) for p in path
-    )
-    fallback = find
-    loads = _loads
-
-    def fast_walk(s):
-        if s is None:
-            return MISSING, None
-        try:
-            doc = loads(s)
-        except Exception:
-            return fallback(s, path)
-        try:
-            for is_key, p in ops:
-                if is_key:
-                    if type(doc) is dict:
-                        doc = doc[p]  # KeyError -> MISSING
-                    else:
-                        return MISSING, None
-                else:
-                    if type(doc) is not list:
-                        return MISSING, None
-                    doc = doc[p]  # IndexError -> MISSING
-        except (KeyError, IndexError):
-            return MISSING, None
-        if doc is None:
-            return NULL, None
-        if doc is True or doc is False:
-            return BOOL, doc
-        t = type(doc)
-        if t is int:
-            return INT, doc
-        if t is float:
-            return FLOAT, doc
-        if t is str:
-            return STR, doc
-        if t is list:
-            return ARRAY, doc
-        return OBJECT, doc
-
-    return fast_walk
+    ops = _compile_path(path)
+    if ops is None:
+        return _constant_missing
+    return functools.partial(_parse_walk, path, ops)
 
 
 def find_raw(s, path):

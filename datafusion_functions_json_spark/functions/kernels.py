@@ -1,15 +1,17 @@
-"""Pandas-level kernels for the 13 JSON functions.
+"""Kernels for the 13 JSON functions.
 
-Pure Python + pandas — no SparkSession needed, mirroring the reference's
-two-layer testability (kernels invokable directly, reference:
-tests/main.rs:689-718 call ``invoke_with_args`` below the planner). Each
-kernel takes the JSON column as an iterable of ``str | None`` plus a
-per-row iterable of path tuples (``itertools.repeat(path)`` for the
-literal-path case — the dominant one), and returns plain Python lists
-ready for Arrow conversion.
+Pure Python over plain sequences — no SparkSession needed, mirroring the
+reference's two-layer testability (kernels invokable directly,
+reference: tests/main.rs:689-718 call ``invoke_with_args`` below the
+planner). Each kernel takes the JSON column as a sequence of
+``str | None`` plus a per-row iterable of path tuples
+(``itertools.repeat(path)`` for the literal-path case — the dominant
+one), and returns plain Python lists ready for Arrow conversion.
 
 Semantics per function are documented in SURVEY.md §2.1 with reference
-file:line citations; the shared traversal lives in :mod:`.core`.
+file:line citations; the shared traversal lives in :mod:`.core`, and
+every scalar getter maps the ``(kind, value)`` it finds to its output
+through one coercion table (:data:`COERCE`).
 """
 
 from __future__ import annotations
@@ -60,29 +62,160 @@ def repeat_path(path: Sequence) -> Iterable:
     return itertools.repeat(tuple(path))
 
 
-def _adaptive_raw_fallback(sample: int = 256):
-    """Per-batch chooser between the loads fast path and the streaming
-    scan for kernels that need RAW container slices.
+def _as_str(k, v):
+    """json_get_str (reference: src/json_get_str.rs:74-77)."""
+    return v if k == STR else None
 
-    ``find_scalar`` yields parsed containers, so container rows must
-    re-run the streaming scan — two parses. Whether that pays depends on
-    the data: scalar-heavy columns win big, container-heavy columns lose
-    ~2×. Sample the first ``sample`` rows; if container rows dominate,
-    switch the rest of the batch to the streaming scan outright (paths
-    are constant per batch in the dominant literal-path case, so the
-    sample is representative).
+
+def _as_int(k, v):
+    """json_get_int: int in i64, string with Rust i64 semantics
+    (reference: src/json_get_int.rs:102-116)."""
+    if k == INT:
+        return v if INT64_MIN <= v <= INT64_MAX else None
+    return core.parse_int_like_rust(v) if k == STR else None
+
+
+def _as_float(k, v):
+    """json_get_float: float, int coerced, string with Rust f64
+    semantics (reference: src/json_get_float.rs:115-122)."""
+    if k == FLOAT:
+        return v
+    if k == INT:
+        return float(v)
+    return core.parse_float_like_rust(v) if k == STR else None
+
+
+def _as_bool(k, v):
+    """json_get_bool (reference: src/json_get_bool.rs:75-78)."""
+    if k == BOOL:
+        return v
+    return core.parse_bool_like_rust(v) if k == STR else None
+
+
+def _as_text(k, v):
+    """json_as_text: strings unquoted, null/missing → NULL, any other
+    value as its JSON text. A ``str`` value is a decoded string or a raw
+    slice (see :data:`RAW`) and passes through; bools and ints print
+    canonically (reference: src/json_as_text.rs:101-112)."""
+    if k == MISSING or k == NULL:
+        return None
+    if type(v) is str:
+        return v
+    return core.json_dumps_canonical(k, v)
+
+
+def _exists(k, v):
+    """json_contains: present, including present-null."""
+    return k != MISSING
+
+
+def _union_text(k, v):
+    """json_union_to_text(json_get(...)): big ints land in the union's
+    null arm (reference: src/json_union_to_text.rs:82-118)."""
+    if k == INT and not (INT64_MIN <= v <= INT64_MAX):
+        return None
+    return core.json_dumps_canonical(k, v)
+
+
+def _union_isnull(k, v):
+    """json_is_null(json_get(...)): missing, json null, or big int."""
+    return k == MISSING or k == NULL or (
+        k == INT and not (INT64_MIN <= v <= INT64_MAX)
+    )
+
+
+# (kind, value) -> output, per output kind; shared by the single-field
+# kernels and json_extract_multi so the two cannot drift
+COERCE = {
+    "str": _as_str,
+    "int": _as_int,
+    "float": _as_float,
+    "bool": _as_bool,
+    "text": _as_text,
+    "exists": _exists,
+    "union_text": _union_text,
+    "union_isnull": _union_isnull,
+}
+
+# Output kinds whose coercion tells an integer outside i64 apart from
+# the lossy float orjson returns for it outside [i64::MIN, u64::MAX];
+# only these need the 19-digit guard. Proof for the rest (the guarded
+# path would return INT with the exact value):
+# * str / bool: both INT and FLOAT coerce to NULL.
+# * int: INT out of i64 -> NULL, FLOAT -> NULL — equal.
+# * float: float(exact_int) IS the nearest double, exactly the lossy
+#   float the fast path returns.
+# * exists: kind != MISSING either way.
+# * text: an int prints as its own digits; floats take the raw slice
+#   anyway (see RAW).
+OBSERVES_BIG = frozenset({"union_text", "union_isnull"})
+
+
+def _is_container(k, v):
+    return k == ARRAY or k == OBJECT
+
+
+def _text_needs_raw(k, v):
+    # floats and containers print VERBATIM ('4.2e-1' stays '4.2e-1');
+    # int 0 may be spelled '-0' in the document
+    return k == FLOAT or k == ARRAY or k == OBJECT or (k == INT and v == 0)
+
+
+def _find_text(s, p):
+    kind, raw, sval = core.find_raw(s, p)
+    return kind, (sval if kind == STR else raw)
+
+
+# Output kinds that need the document's own bytes for some values:
+# (needs_raw(kind, value) on a parsed lookup, streaming finder giving
+# the (kind, value) to coerce instead). json_get's union struct shares
+# union_text's entry.
+RAW = {
+    "text": (_text_needs_raw, _find_text),
+    "union_text": (_is_container, core.find),
+}
+
+
+def _compiled_lookup():
+    """``core.find_scalar(s, p)`` that compiles each distinct path once
+    per batch. Both surfaces normalize per-row path elements to str /
+    int / None, so equal paths compile equally."""
+    compiled = {}
+
+    def lookup(s, p):
+        f = compiled.get(p)
+        if f is None:
+            f = compiled[p] = core.make_find_scalar(p)
+        return f(s)
+
+    return lookup
+
+
+def _adaptive_raw_fallback(needs_raw, find_raw, sample=256):
+    """Per-batch chooser between the loads fast path and the streaming
+    scan for kernels that need RAW text for some values.
+
+    The guarded lookup yields parsed values, so rows where
+    ``needs_raw(kind, value)`` must re-run the streaming ``find_raw`` —
+    two parses. Whether that pays depends on the data: scalar-heavy
+    columns win big, raw-heavy columns lose ~2×. Sample the first
+    ``sample`` rows; if raw-needing rows dominate, switch the rest of
+    the batch to the streaming scan outright (paths are constant per
+    batch in the dominant literal-path case, so the sample is
+    representative).
     """
-    state = {"seen": 0, "containers": 0, "streaming": False}
+    state = {"seen": 0, "raws": 0, "streaming": False}
+    lookup = _compiled_lookup()
 
     def find_with_raw(s, p):
         if state["streaming"]:
-            return core.find(s, p)
-        kind, v = core.find_scalar(s, p)
-        if kind == ARRAY or kind == OBJECT:
-            kind, v = core.find(s, p)  # raw-slice fidelity
-            state["containers"] += 1
+            return find_raw(s, p)
+        kind, v = lookup(s, p)
+        if needs_raw(kind, v):
+            kind, v = find_raw(s, p)
+            state["raws"] += 1
         state["seen"] += 1
-        if state["seen"] == sample and state["containers"] * 2 > sample:
+        if state["seen"] == sample and state["raws"] * 2 > sample:
             state["streaming"] = True
         return kind, v
 
@@ -99,9 +232,7 @@ def kernel_json_get(json_vals, paths):
     documented deviation).
     """
     tids, bools, ints, floats, strs, arrs, objs = ([] for _ in range(7))
-    fallback = _adaptive_raw_fallback()
-    for s, p in zip(json_vals, paths):
-        kind, v = fallback(s, p)
+    for kind, v in _scalar_pairs(json_vals, paths, "union_text"):
         b = i = f = st = ar = ob = None
         if kind == BOOL:
             tid, b = 1, v
@@ -138,17 +269,24 @@ def kernel_json_get(json_vals, paths):
     }
 
 
+def _is_text(t):
+    import pyarrow as pa
+
+    return pa.types.is_string(t) or pa.types.is_large_string(t)
+
+
 def _fast_mask(json_vals, needles, check_big):
-    """Batch-vectorized evaluation of ``find_scalar``'s textual guards
+    """Batch-vectorized evaluation of ``core._guarded``'s textual guards
     (round-17 optimization, guide §4.2): True where a row may take the
     loads+walk fast path — no backslash AND every queried path key
     occurs at most once AND (when ``check_big``) no 19-digit run.
     Identical conditions to the per-row guards, evaluated in one
     pyarrow.compute pass over the whole Arrow batch instead of 2+K
     C-string calls per row (measured 2.2x on the per-row guard cost at
-    600k nested docs). Returns a numpy bool array (null rows False), or
-    None when pyarrow is unavailable / the batch isn't plain strings —
-    callers then use the per-row guard path unchanged."""
+    600k nested docs). Returns a numpy bool array (null and non-string
+    rows False), or None when pyarrow is unavailable or a non-Arrow
+    batch does not convert to strings — callers then use the per-row
+    guarded path for every row."""
     try:  # pragma: no cover - environment-dependent
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -158,6 +296,12 @@ def _fast_mask(json_vals, needles, check_big):
         json_vals = json_vals.combine_chunks()
     if isinstance(json_vals, pa.Array):
         arr = json_vals  # arrow_udf wrappers: already an Arrow buffer
+        if not _is_text(arr.type):
+            # no string row: every row takes the guarded path, which
+            # reads a non-string document as MISSING
+            import numpy as np
+
+            return np.zeros(len(arr), dtype=bool)
     else:
         try:
             arr = pa.array(json_vals, type=pa.string(), from_pandas=True)
@@ -184,16 +328,17 @@ def _dict_encode(json_vals, min_rows=1024, sample=256):
     parsing every row — and bit-identical, because every kernel is a
     pure per-row function.
 
-    Returns ``(distinct_vals + [None], idx)`` where ``idx`` is a numpy
-    index array mapping each input row to its distinct value (null
-    rows map to the appended ``None`` slot, so kernels compute the
-    null-row result themselves), or ``None`` when the shortcut does
-    not apply: batch under ``min_rows``, a head-``sample`` probe reads
-    mostly-distinct (>7/8), the full encode finds fewer than 2 rows
-    per distinct value, pyarrow is unavailable, or the batch isn't
-    plain strings. The two cardinality gates bound the overhead on
-    high-cardinality data to one hash pass over the sampled head
-    (~0.25 ms / 256 rows) plus, past the head gate, one
+    ``json_vals`` is the ``pyarrow`` array the UDF receives. Returns
+    ``(distinct_vals + [None], idx)`` where ``idx`` is an Arrow index
+    array (for ``pc.take``) mapping each input row to its distinct
+    value (null rows map to the appended ``None`` slot, so kernels
+    compute the null-row result themselves), or ``None`` when the
+    shortcut does not apply: batch under ``min_rows``, a
+    head-``sample`` probe reads mostly-distinct (>7/8), the full encode
+    finds fewer than 2 rows per distinct value, pyarrow is unavailable,
+    or the batch isn't strings. The two cardinality gates bound the
+    overhead on high-cardinality data to one hash pass over the sampled
+    head (~0.25 ms / 256 rows) plus, past the head gate, one
     ``dictionary_encode`` (~27 ns/row measured) — callers then run the
     unchanged direct path."""
     try:  # pragma: no cover - environment-dependent
@@ -201,40 +346,16 @@ def _dict_encode(json_vals, min_rows=1024, sample=256):
         import pyarrow.compute as pc
     except ImportError:
         return None
-    arr = None
     if isinstance(json_vals, pa.ChunkedArray):
         json_vals = json_vals.combine_chunks()
-    if isinstance(json_vals, pa.Array):
-        arr = json_vals
-        n = len(arr)
-        if n < min_rows:
-            return None
-        head = arr.slice(0, sample).to_pylist()
-    else:
-        try:
-            n = len(json_vals)
-        except TypeError:
-            return None
-        if n < min_rows:
-            return None
-        head = (
-            json_vals.iloc[:sample]
-            if hasattr(json_vals, "iloc")
-            else json_vals[:sample]
-        )
-        head = head.tolist() if hasattr(head, "tolist") else head
-    try:
-        distinct = len(set(head))
-    except TypeError:
-        return None  # unhashable entries: not plain strings
+    arr = json_vals
+    n = len(arr)
+    if n < min_rows or not _is_text(arr.type):
+        return None
+    distinct = len(set(arr.slice(0, sample).to_pylist()))
     if distinct * 8 > sample * 7:
         return None  # mostly-distinct head: dedup unlikely to pay
-    try:
-        if arr is None:
-            arr = pa.array(json_vals, type=pa.string(), from_pandas=True)
-        enc = arr.dictionary_encode()
-    except Exception:
-        return None
+    enc = arr.dictionary_encode()
     d = len(enc.dictionary)
     if d * 2 > n:
         return None  # head lied (e.g. sorted input): direct path
@@ -242,73 +363,43 @@ def _dict_encode(json_vals, min_rows=1024, sample=256):
     return enc.dictionary.to_pylist() + [None], idx
 
 
-def _scatter(out_d, idx):
-    """Scatter per-distinct kernel outputs back to row order via numpy
-    fancy indexing on an object array (C-speed; measured 14x over the
-    per-row kernel on a 600k-row 30-distinct batch). ``idx`` is the
-    Arrow index array from :func:`_dict_encode`. Element-wise fill
-    keeps ragged values (lists from json_get_array / object_keys) as
-    single cells instead of letting numpy broadcast them. Arrow-native
-    callers (the arrow_udf wrappers) skip this and ``pc.take`` typed
-    arrays directly."""
-    import numpy as np
+def _scalar_pairs(json_vals, paths, kind):
+    """(kind, value) per row for output kind ``kind`` (a :data:`COERCE`
+    key), via the guarded parse + walk of :mod:`.core`.
 
-    a = np.empty(len(out_d), dtype=object)
-    for i, v in enumerate(out_d):
-        a[i] = v
-    return a[idx.to_numpy()]
-
-
-def _scalar_pairs(json_vals, paths, *, check_big=True):
-    """(kind, value) per row via ``find_scalar``. When ``paths`` is a
-    constant ``itertools.repeat`` — the literal-path UDF shape — the
-    per-path guards compile ONCE via :func:`core.make_find_scalar`
-    instead of being re-derived per row (~40% off the scalar kernels'
-    Python overhead on short documents), and since round 17 the guards
-    themselves run BATCH-VECTORIZED (:func:`_fast_mask`): guard-clear
-    rows take the bare loads+walk (:func:`core.make_fast_walk`),
-    everything else the unchanged per-row guarded path.
-
-    ``check_big=False`` lets a kernel skip the 19-digit orjson guard
-    when its own coercion makes the INT-vs-lossy-FLOAT distinction
-    unobservable. Proof per caller (raw integer literal out of i64
-    range; orjson returns exact int within u64, lossy float outside;
-    the guarded path would return INT with the exact value):
-    * json_get_str / json_get_bool: both INT and FLOAT coerce to NULL.
-    * json_get_int: INT out of [i64] -> NULL, FLOAT -> NULL — equal.
-    * json_get_float: float(exact_int) IS the nearest double, which is
-      exactly the lossy float the fast path returns.
-    * json_contains: kind != MISSING either way.
-    Kernels that DO observe the distinction (is_null_fused: big int ->
-    null arm; to_text_fused / json_get union: big int -> NULL vs float
-    -> canonical text) keep ``check_big=True``."""
+    * Kinds in :data:`RAW` take the adaptive sampler, re-reading the
+      rows whose value needs the document's own bytes.
+    * A constant ``itertools.repeat`` path — the literal-path UDF
+      shape — compiles once, and the guards run BATCH-VECTORIZED
+      (:func:`_fast_mask`): guard-clear rows take the bare parse + walk
+      (:func:`core.make_fast_walk`), the rest the per-row guarded path.
+      The 19-digit term runs only for :data:`OBSERVES_BIG` kinds.
+    * Per-row (column) paths compile once per distinct path in the
+      batch (:func:`_compiled_lookup`)."""
+    if kind in RAW:
+        return map(_adaptive_raw_fallback(*RAW[kind]), json_vals, paths)
     if type(paths) is itertools.repeat:
-        path = tuple(next(iter(paths)))
+        path = tuple(next(paths))
         const = core.make_find_scalar(path)
-        mask = _fast_mask(json_vals, core.guard_needles(path),
-                          check_big and core._IS_ORJSON)
-        if mask is None:
-            return map(const, json_vals)
         walk = core.make_fast_walk(path)
-        vals = (
-            json_vals.tolist()
-            if hasattr(json_vals, "tolist")
-            else json_vals
-        )
-        return [
-            walk(s) if ok else const(s) for s, ok in zip(vals, mask)
-        ]
-    find_scalar = core.find_scalar
-    return (find_scalar(s, p) for s, p in zip(json_vals, paths))
+        mask = _fast_mask(json_vals, core.guard_needles(path),
+                          kind in OBSERVES_BIG and core._IS_ORJSON)
+        if mask is None:
+            mask = itertools.repeat(False)
+        vals = json_vals.tolist() if hasattr(json_vals, "tolist") else json_vals
+        return [walk(s) if ok else const(s) for s, ok in zip(vals, mask)]
+    return map(_compiled_lookup(), json_vals, paths)
+
+
+def _coerced(kind, json_vals, paths):
+    to = COERCE[kind]
+    return [to(k, v) for k, v in _scalar_pairs(json_vals, paths, kind)]
 
 
 def kernel_json_get_str(json_vals, paths):
     """Value only if a JSON string; everything else NULL (reference:
     src/json_get_str.rs:74-77)."""
-    return [
-        v if kind == STR else None
-        for kind, v in _scalar_pairs(json_vals, paths, check_big=False)
-    ]
+    return _coerced("str", json_vals, paths)
 
 
 def kernel_json_get_int(json_vals, paths):
@@ -322,15 +413,7 @@ def kernel_json_get_int(json_vals, paths):
     semantics and the DuckDB oracle (same deviation class as the BigInt
     ``todo!`` null-arm documented on kernel_json_get). Pinned by
     tests/test_functions.py::test_negative_numbers_returned."""
-    out = []
-    for kind, v in _scalar_pairs(json_vals, paths, check_big=False):
-        if kind == INT:
-            out.append(v if INT64_MIN <= v <= INT64_MAX else None)
-        elif kind == STR:
-            out.append(core.parse_int_like_rust(v))
-        else:
-            out.append(None)
-    return out
+    return _coerced("int", json_vals, paths)
 
 
 def kernel_json_get_float(json_vals, paths):
@@ -339,31 +422,13 @@ def kernel_json_get_float(json_vals, paths):
     bool/null/containers → NULL. Same deliberate negative-number
     deviation as :func:`kernel_json_get_int` (reference
     src/json_get_float.rs:110 omits Peek::Minus; we return the value)."""
-    out = []
-    for kind, v in _scalar_pairs(json_vals, paths, check_big=False):
-        if kind == FLOAT:
-            out.append(v)
-        elif kind == INT:
-            out.append(float(v))
-        elif kind == STR:
-            out.append(core.parse_float_like_rust(v))
-        else:
-            out.append(None)
-    return out
+    return _coerced("float", json_vals, paths)
 
 
 def kernel_json_get_bool(json_vals, paths):
     """JSON true/false → value; string only exact 'true'/'false'
     (reference: src/json_get_bool.rs:75-78); everything else NULL."""
-    out = []
-    for kind, v in _scalar_pairs(json_vals, paths, check_big=False):
-        if kind == BOOL:
-            out.append(v)
-        elif kind == STR:
-            out.append(core.parse_bool_like_rust(v))
-        else:
-            out.append(None)
-    return out
+    return _coerced("bool", json_vals, paths)
 
 
 def kernel_json_get_json(json_vals, paths):
@@ -389,45 +454,14 @@ def kernel_json_as_text(json_vals, paths):
     """Postgres ->> : JSON string → unquoted text; JSON null → SQL NULL;
     any other present value → raw JSON text (reference:
     src/json_as_text.rs:101-112)."""
-    out = []
-    seen = raws = 0
-    streaming = False
-    for s, p in zip(json_vals, paths):
-        if streaming:
-            kind, raw, sval = core.find_raw(s, p)
-            if kind == STR:
-                out.append(sval)
-            elif kind == MISSING or kind == NULL:
-                out.append(None)
-            else:
-                out.append(raw)
-            continue
-        kind, v = core.find_scalar(s, p)
-        if kind == STR:
-            out.append(v)
-        elif kind == MISSING or kind == NULL:
-            out.append(None)
-        elif kind == BOOL:
-            out.append("true" if v else "false")
-        elif kind == INT and v != 0:
-            out.append(str(v))  # escape-free JSON int: raw text == str(v)
-        else:
-            # FLOAT / containers need the VERBATIM slice ('4.2e-1' stays
-            # '4.2e-1'); INT 0 may be spelled '-0' in the document
-            _, raw, _ = core.find_raw(s, p)
-            out.append(raw)
-            raws += 1
-        seen += 1
-        if seen == 256 and raws * 2 > seen:
-            streaming = True  # raw-needing rows dominate: skip double parse
-    return out
+    return _coerced("text", json_vals, paths)
 
 
 def kernel_json_contains(json_vals, paths):
     """TRUE iff the path exists — including present-null (reference:
     tests/main.rs:21-43); invalid JSON → False, never an error (reference:
     src/json_contains.rs:103-106)."""
-    return [kind != MISSING for kind, _ in _scalar_pairs(json_vals, paths, check_big=False)]
+    return _coerced("exists", json_vals, paths)
 
 
 def kernel_json_length(json_vals, paths):
@@ -448,27 +482,13 @@ def kernel_json_to_text_fused(json_vals, paths):
     intermediate union struct. Same output as the two-step composition
     (strings re-encoded canonically, containers raw passthrough, null
     arm/missing/out-of-range ints => SQL NULL)."""
-    out = []
-    fallback = _adaptive_raw_fallback()
-    for s, p in zip(json_vals, paths):
-        kind, v = fallback(s, p)
-        if kind == INT and not (INT64_MIN <= v <= INT64_MAX):
-            out.append(None)  # big ints land in the null arm (union rules)
-        else:
-            out.append(core.json_dumps_canonical(kind, v))
-    return out
+    return _coerced("union_text", json_vals, paths)
 
 
 def kernel_json_is_null_fused(json_vals, paths):
     """Fused ``json_is_null(json_get(j, *path))``: true iff the union
     would hold the null arm (missing / json-null / invalid / big int)."""
-    out = []
-    for kind, v in _scalar_pairs(json_vals, paths):
-        out.append(
-            kind in (MISSING, NULL)
-            or (kind == INT and not (INT64_MIN <= v <= INT64_MAX))
-        )
-    return out
+    return _coerced("union_isnull", json_vals, paths)
 
 
 def kernel_json_union_to_text(
@@ -479,8 +499,8 @@ def kernel_json_union_to_text(
     canonical, float via repr (matches serde_json for normal values),
     strings JSON-quoted+escaped, containers raw passthrough.
 
-    Takes the 7 member columns as parallel sequences (a struct column
-    arrives in pandas as a DataFrame; the wrapper splits it).
+    Takes the 7 member columns as parallel sequences (the wrapper reads
+    each child of the Arrow struct column).
     """
     out = []
     for tid, b, i, f, st, ar, ob in zip(

@@ -5,29 +5,31 @@ The reference evaluates one UDF per extraction, re-parsing the document
 per call (mitigated by its call un-nesting for chained lookups;
 SURVEY.md §2.3). For the analytics pattern "project 5 typed fields out
 of one JSON column", our engine can do strictly better than both the
-reference and naive per-field UDFs: a single pandas UDF that parses each
-document once (C-accelerated ``json.loads``) and emits a struct — one
+reference and naive per-field UDFs: a single Arrow UDF that parses each
+document once (C-accelerated ``loads``) and emits a struct — one
 JVM→Python Arrow hop, one parse, N fields.
 
-Semantics per field mirror the single-field kernels exactly (same
-coercion and null taxonomy); documents where strict full-document
-parsing fails (invalid JSON — or valid-prefix-plus-garbage, which the
-streaming finder tolerates) fall back to the per-path streaming finder,
-so results are IDENTICAL to N separate calls.
+Each field walks the parsed document with the shared :mod:`.core` walk
+and coerces through the single-field kernels' table
+(``kernels.COERCE``), so the semantics cannot drift; documents where
+strict full-document parsing fails (invalid JSON — or
+valid-prefix-plus-garbage, which the streaming finder tolerates) fall
+back to the per-path streaming finder, so results are IDENTICAL to N
+separate calls.
 """
 
 from __future__ import annotations
 
 import functools
 import json
-import re
-from typing import Mapping, Sequence, Tuple
+from typing import Mapping, Tuple
 
 import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from . import core
+from . import core, kernels
+from .api import _literal_path
 
 __all__ = ["json_extract_multi", "FIELD_KINDS"]
 
@@ -48,150 +50,36 @@ FIELD_KINDS = {
 }
 
 
-def _nav(doc, path):
-    """Navigate a parsed DOM; returns (found, value)."""
-    cur = doc
-    for p in path:
-        if isinstance(p, str):
-            if not isinstance(cur, dict) or p not in cur:
-                return False, None
-            cur = cur[p]
-        else:
-            i = int(p)
-            if isinstance(cur, bool) or not isinstance(cur, list):
-                return False, None
-            if i < 0 or i >= len(cur):
-                return False, None
-            cur = cur[i]
-    return True, cur
+# the single-field function each kind mirrors (names it in path errors)
+_KIND_FN = {
+    "str": "json_get_str",
+    "int": "json_get_int",
+    "float": "json_get_float",
+    "bool": "json_get_bool",
+    "text": "json_as_text",
+    "length": "json_length",
+    "exists": "json_contains",
+    "union_text": "json_get",
+    "union_isnull": "json_get",
+}
 
 
-def _coerce(kind: str, found: bool, v):
-    """Apply the single-field kernel's coercion rules to a DOM value
-    (reference semantics per SURVEY.md §2.1)."""
-    if kind == "exists":
-        return found
-    if kind == "union_isnull":
-        # true iff json_get would fill the union's null arm — missing,
-        # json null, or out-of-i64 int
-        if not found or v is None:
-            return True
-        if isinstance(v, int) and not isinstance(v, bool):
-            return not (core.INT64_MIN <= v <= core.INT64_MAX)
-        return False
-    if not found:
-        return None
-    if kind == "str":
-        return v if isinstance(v, str) else None
-    if kind == "int":
-        if isinstance(v, bool):
-            return None
-        if isinstance(v, int):
-            return v if core.INT64_MIN <= v <= core.INT64_MAX else None
-        if isinstance(v, str):
-            return core.parse_int_like_rust(v)
-        return None
-    if kind == "float":
-        if isinstance(v, bool):
-            return None
-        if isinstance(v, float):
-            return v
-        if isinstance(v, int):
-            return float(v)
-        if isinstance(v, str):
-            return core.parse_float_like_rust(v)
-        return None
-    if kind == "bool":
-        if isinstance(v, bool):
-            return v
-        if isinstance(v, str):
-            return core.parse_bool_like_rust(v)
-        return None
-    if kind == "text":
-        # json_as_text: string unquoted; null -> SQL NULL; bool/nonzero-int
-        # canonical text == raw text; floats, containers and int 0 (maybe
-        # spelled '-0') go through the raw-slice fallback in extract_row
-        # so '4.2e-1' stays '4.2e-1' (reference: src/json_as_text.rs
-        # raw-slice arm, tests/main.rs:507-512)
-        if v is None:
-            return None
-        if isinstance(v, str):
-            return v
-        if isinstance(v, bool):
-            return "true" if v else "false"
-        if isinstance(v, int):
-            return str(v)
-        return None  # floats/containers handled by fallback
+def _parsed_length(k, v):
+    """json_length of a PARSED value (reference: src/json_length.rs:99-128)."""
+    return len(v) if k == core.ARRAY or k == core.OBJECT else None
+
+
+def _streaming_reader(kind, path):
+    """The field's value from the streaming finder — for documents the
+    strict parser rejects and for values that need the document's own
+    bytes (``kernels.RAW``): json_length counts by value-skipping, every
+    other kind coerces the streaming ``(kind, value)`` through the
+    kernels' table."""
     if kind == "length":
-        if isinstance(v, dict):
-            return len(v)
-        if isinstance(v, bool):
-            return None
-        if isinstance(v, list):
-            return len(v)
-        return None
-    if kind == "union_text":
-        # json_union_to_text over the would-be union: null arm => NULL,
-        # bool/int/float canonical, strings JSON-quoted, containers raw
-        # (raw handled by the fallback in extract_row)
-        if v is None:
-            return None
-        if isinstance(v, bool):
-            return "true" if v else "false"
-        if isinstance(v, int):
-            return (
-                str(v) if core.INT64_MIN <= v <= core.INT64_MAX else None
-            )  # big ints land in the null arm
-        if isinstance(v, float):
-            return core.json_dumps_canonical(core.FLOAT, v)
-        if isinstance(v, str):
-            return core.json_dumps_canonical(core.STR, v)
-        return None  # containers handled by fallback
-    raise ValueError(f"unknown field kind {kind!r}")
-
-
-def _fallback_one(s, kind: str, path):
-    """Streaming-finder path for docs the strict parser rejects and for
-    container-valued text fields — bit-identical to the single kernels."""
-    if kind == "exists":
-        return core.exists_at(s, path)
-    if kind == "length":
-        return core.length_at(s, path)
-    if kind == "text":
-        k, raw, sval = core.find_raw(s, path)
-        if k == core.STR:
-            return sval
-        if k in (core.MISSING, core.NULL):
-            return None
-        return raw
-    if kind == "union_text":
-        k, v = core.find(s, path)
-        if k == core.INT and not (core.INT64_MIN <= v <= core.INT64_MAX):
-            return None
-        return core.json_dumps_canonical(k, v)
-    if kind == "union_isnull":
-        k, v = core.find(s, path)
-        return k in (core.MISSING, core.NULL) or (
-            k == core.INT and not (core.INT64_MIN <= v <= core.INT64_MAX)
-        )
-    k, v = core.find(s, path)
-    if kind == "str":
-        return v if k == core.STR else None
-    if kind == "int":
-        if k == core.INT:
-            return v if core.INT64_MIN <= v <= core.INT64_MAX else None
-        return core.parse_int_like_rust(v) if k == core.STR else None
-    if kind == "float":
-        if k == core.FLOAT:
-            return v
-        if k == core.INT:
-            return float(v)
-        return core.parse_float_like_rust(v) if k == core.STR else None
-    if kind == "bool":
-        if k == core.BOOL:
-            return v
-        return core.parse_bool_like_rust(v) if k == core.STR else None
-    raise ValueError(f"unknown field kind {kind!r}")
+        return lambda s: core.length_at(s, path)
+    to = kernels.COERCE[kind]
+    find = kernels.RAW[kind][1] if kind in kernels.RAW else core.find
+    return lambda s: to(*find(s, path))
 
 
 # kinds expressible on the pure-JVM variant tier (functions/native.py)
@@ -261,7 +149,7 @@ def _auto_tier(specs, json_profile, input_df=None) -> str:
        r16 default-tier change (``tier='auto'``) is bit-compatible with
        r15's ``tier='exact'`` default: speed is one explicit
        ``json_profile=JsonProfile()`` away, silent divergence never is.
-    1. A JVM tier is eligible iff Spark >= 4, every requested kind/path
+    1. A JVM tier is eligible iff every requested kind/path
        is variant-expressible, and the profile doesn't disqualify the
        corresponding function's envelope (same rules as
        :func:`~.native.recommend_tier`) — otherwise ``exact``.
@@ -279,32 +167,15 @@ def _auto_tier(specs, json_profile, input_df=None) -> str:
        where plan stats are unreachable) → ``variant_perfield``
        (measured ~20% under Arrow+orjson on tiny-doc scans, no Python
        workers — the conservative choice at scale)."""
-    import pyspark
-
-    from .native import _jvm_tier_ok, jsonpath, parse_spark_version
+    from .native import _jvm_tier_ok, jsonpath
 
     if json_profile is None:
         return "exact"  # no data claim -> nothing provable -> fidelity
-    try:
-        ver = parse_spark_version(pyspark.__version__)
-    except ValueError:
-        return "exact"
-    if ver < (4, 0):
-        return "exact"
     p = json_profile
-    kind_fn = {
-        "str": "json_get_str",
-        "int": "json_get_int",
-        "float": "json_get_float",
-        "bool": "json_get_bool",
-        "text": "json_as_text",
-        "length": "json_length",
-        "exists": "json_contains",
-    }
     for _, kind, path in specs:
-        if kind not in _VARIANT_KINDS or kind not in kind_fn:
+        if kind not in _VARIANT_KINDS:
             return "exact"
-        if not _jvm_tier_ok(kind_fn[kind], "variant", p):
+        if not _jvm_tier_ok(_KIND_FN[kind], "variant", p):
             return "exact"
         try:
             jsonpath(path)
@@ -333,8 +204,8 @@ def json_extract_multi(
     document.
 
     ``fields``: ``{out_name: (kind, *path)}`` with kind in
-    ``FIELD_KINDS`` ({str,int,float,bool,text,length,exists}) and path
-    elements str (key) / int (index).
+    ``FIELD_KINDS`` and path elements str (key) / int (index), checked
+    with the single-field getters' rules.
 
     Returns a struct column; expand with ``.select(out["*"])`` or
     ``F.col("out.*")``.
@@ -376,7 +247,7 @@ def json_extract_multi(
     ``json_profile=JsonProfile()`` (the permissive claim: no mixed-type
     paths, no trailing garbage, no raw-slice needs...) to unlock the
     JVM tiers. Given a profile: exact whenever any
-    field's envelope or Spark < 4 disqualifies the JVM tiers (silent
+    field's envelope disqualifies the JVM tiers (silent
     fallback instead of the variant tier's hard errors); otherwise
     fused ``variant`` at >= 3 fields, ``variant_perfield`` at 1-2
     fields — except that when ``input_df`` (the DataFrame the column
@@ -415,7 +286,7 @@ def json_extract_multi(
                 f"unknown kind {kind!r} for field {name!r}; expected one "
                 f"of {sorted(FIELD_KINDS)}"
             )
-        specs.append((name, kind, tuple(path)))
+        specs.append((name, kind, _literal_path(_KIND_FN[kind], path)))
     if tier == "auto":
         tier = _auto_tier(specs, json_profile, input_df)
     if tier in ("variant", "variant_perfield"):
@@ -429,47 +300,47 @@ def json_extract_multi(
             return _variant_perfield(json_col, specs)
         return _variant_multi(json_col, specs)
     ret = "struct<" + ",".join(f"`{n}`:{FIELD_KINDS[k]}" for n, k, _ in specs) + ">"
-    # parse_constant: reject NaN/Infinity tokens like the reference's
-    # jiter — such documents are invalid, every field takes the fallback
-    # row (core._reject_nonfinite_token; orjson rejects them natively)
-    loads = functools.partial(
-        json.loads, parse_constant=core._reject_nonfinite_token
-    )
-    try:  # orjson (Rust): ~6× the hooked stdlib path; guarded below
-        from orjson import loads as fast_loads
-
-        # orjson float-ifies ints outside [i64::MIN, u64::MAX]; any 19+
-        # digit run routes to the stdlib path (see core._BIG_DIGITS)
-        big_digits = re.compile(r"[0-9]{19}").search
-    except ImportError:  # pragma: no cover
-        fast_loads = loads
-        big_digits = None
 
     def first_wins(pairs):
         # duplicate keys: the reference's linear scan takes the FIRST
         # match (src/common.rs:531-539); plain dict() would keep the last
         return dict(reversed(pairs))
 
-    # textual guard (same proof as core.find_scalar): with no backslashes,
-    # counting '"key"' occurrences bounds the members with that name, so a
-    # single occurrence of every queried path key means first-match ==
-    # plain-dict lookup and the hook (and its per-object cost) is
-    # unnecessary. Any ambiguity -> stdlib loads with the first-wins hook.
-    quoted_keys = tuple(
-        '"%s"' % p
-        for p in {p for _, _, path in specs for p in path if isinstance(p, str)}
+    # rows failing the guards parse with the stdlib and the first-wins
+    # hook; parse_constant rejects NaN/Infinity tokens like the
+    # reference's jiter (orjson, behind core._loads, rejects them natively)
+    loads = functools.partial(
+        json.loads,
+        parse_constant=core._reject_nonfinite_token,
+        object_pairs_hook=first_wins,
     )
+    fast_loads = core._loads
+    walk = core._walk
+    missing = (core.MISSING, None)
 
-    # Does any kind OBSERVE the INT-vs-lossy-FLOAT distinction orjson
-    # introduces for integers outside [i64::MIN, u64::MAX]? Only the
-    # union kinds (big int -> null arm). Every other kind coerces the
-    # two identically ('int': both -> NULL out of range; 'float':
-    # float(exact int) == the lossy double; 'text': floats take the
-    # raw-slice fallback anyway; str/bool -> NULL; exists/length
-    # untouched) — same per-kind proofs as kernels._scalar_pairs.
-    needs_big = any(k in ("union_text", "union_isnull") for _, k, _ in specs)
-    from .kernels import _dict_encode as dict_encode  # closure-captured
-    from .kernels import _fast_mask as fast_mask  # closure-captured
+    # The guards of core._guarded, batch-vectorized over the union of the
+    # queried keys: a row that clears them has a unique member for every
+    # path key, so first-match == plain-dict lookup. The 19-digit term
+    # only when a kind observes it (kernels.OBSERVES_BIG).
+    quoted_keys = tuple({nd for _, _, p in specs for nd in core.guard_needles(p)})
+    check_big = core._IS_ORJSON and any(
+        k in kernels.OBSERVES_BIG for _, k, _ in specs
+    )
+    # per field: compiled walk ops (None: misses on every row), the
+    # coercion of a parsed (kind, value), the raw-needing predicate
+    # (kernels.RAW; None when every value coerces from the parse) and
+    # the streaming reader
+    readers = []
+    for _, k, p in specs:
+        readers.append((
+            core._compile_path(p),
+            _parsed_length if k == "length" else kernels.COERCE[k],
+            kernels.RAW[k][0] if k in kernels.RAW else None,
+            _streaming_reader(k, p),
+        ))
+    null_row = tuple(to(*missing) for _, to, _, _ in readers)
+    dict_encode = kernels._dict_encode  # closure-captured
+    fast_mask = kernels._fast_mask  # closure-captured
 
     # Arrow output type per field (matches FIELD_KINDS / ret exactly)
     _pa_kind = {
@@ -481,91 +352,47 @@ def json_extract_multi(
     out_types = tuple(_pa_kind[FIELD_KINDS[k]] for _, k, _ in specs)
     out_names = [n for n, _, _ in specs]
 
-    def extract_row(s, use_fast=None):
-        if s is None:
-            return tuple(
-                False
-                if k == "exists"
-                else (True if k == "union_isnull" else None)
-                for _, k, _p in specs
-            )
+    def extract_row(s, fast):
+        if not isinstance(s, str):
+            return null_row  # null or non-string document
         try:
-            if use_fast is None:
-                use_fast = not (
-                    "\\" in s
-                    or any(s.count(q) > 1 for q in quoted_keys)
-                    or (big_digits is not None and big_digits(s) is not None)
-                )
-            if use_fast:
-                doc = fast_loads(s)
-            else:
-                doc = loads(s, object_pairs_hook=first_wins)
+            doc = fast_loads(s) if fast else loads(s)
         except Exception:
-            return tuple(_fallback_one(s, k, p) for _, k, p in specs)
+            return tuple(stream(s) for _, _, _, stream in readers)
         out = []
-        for _, k, p in specs:
-            found, v = _nav(doc, p)
-            if found and (
-                (
-                    k == "text"
-                    and (
-                        type(v) is dict
-                        or type(v) is list
-                        or type(v) is float
-                        or (type(v) is int and v == 0)
-                    )
-                )
-                or (
-                    k == "union_text"
-                    and (type(v) is dict or type(v) is list)
-                )
-            ):
-                out.append(_fallback_one(s, k, p))  # raw-bytes fidelity
+        for ops, to, needs_raw, stream in readers:
+            k, v = missing if ops is None else walk(doc, ops)
+            if needs_raw is not None and needs_raw(k, v):
+                out.append(stream(s))  # raw-bytes fidelity
             else:
-                out.append(_coerce(k, found, v))
+                out.append(to(k, v))
         return tuple(out)
 
     @F.arrow_udf(ret)
     def _multi(js: pa.Array) -> pa.Array:
-        # round-17: the textual guards run batch-vectorized over the
-        # Arrow buffer (kernels._fast_mask, guide §4.2) — identical
-        # conditions, one pyarrow.compute pass instead of 2+K C-string
-        # calls per row; the big-digit term only when a union kind
-        # observes it (see needs_big above). mask=None (no pyarrow /
-        # exotic batch) keeps the per-row guard path bit-identically.
-        # fast_mask is CLOSURE-captured, never imported here: a module
-        # import inside the UDF body would need the package on the
-        # worker's sys.path (foreign-cwd contract, __init__.py).
-        # round-18: (a) true Arrow UDF — the batch never materializes
-        # as pandas on either side; typed pa.array outputs
-        # (from_pandas=True keeps the pandas NaN→null coercion);
-        # (b) dictionary shortcut (kernels._dict_encode): when the
-        # batch's documents repeat, parse+extract only the DISTINCT
-        # documents (plus one None for the null-row tuple) and scatter
-        # the per-field columns back via one pc.take each —
-        # bit-identical because extract_row is a pure per-row function
-        # (the reference's dictionary-array evaluation,
-        # src/common.rs:310-327).
+        # The guards run batch-vectorized over the Arrow buffer
+        # (kernels._fast_mask, guide §4.2) — one pyarrow.compute pass
+        # instead of 2+K C-string calls per row. On batches whose
+        # documents repeat, the dictionary shortcut
+        # (kernels._dict_encode) extracts only the DISTINCT documents
+        # (plus one None for the null-row tuple) and scatters each field
+        # column back with one pc.take — bit-identical because
+        # extract_row is a pure per-row function (the reference's
+        # dictionary-array evaluation, src/common.rs:310-327).
+        # dict_encode / fast_mask are CLOSURE-captured, never imported
+        # here: a module import inside the UDF body would need the
+        # package on the worker's sys.path (foreign-cwd contract,
+        # __init__.py).
         import pyarrow.compute as pc
 
         pre = dict_encode(js)
         if pre is None:
-            idx = None
-            vals = js.to_pylist()
-            mask = fast_mask(
-                js, quoted_keys, needs_big and big_digits is not None
-            )
+            idx, vals = None, js.to_pylist()
+            mask = fast_mask(js, quoted_keys, check_big)
         else:
             vals, idx = pre
-            mask = fast_mask(
-                vals, quoted_keys, needs_big and big_digits is not None
-            )
-        if mask is None:
-            rows = [extract_row(s) for s in vals]
-        else:
-            rows = [
-                extract_row(s, bool(ok)) for s, ok in zip(vals, mask)
-            ]
+            mask = fast_mask(vals, quoted_keys, check_big)
+        rows = [extract_row(s, ok) for s, ok in zip(vals, mask)]
         # column-wise assembly: zip(*rows) transposes at C speed
         data = list(zip(*rows)) if rows else [[] for _ in specs]
         children = [

@@ -451,11 +451,24 @@ class TestReviewFindingsRound7e:
 
         assert core.find_scalar(5, ("a",)) == (core.MISSING, None)
         assert core.find_scalar(True, ("a",)) == (core.MISSING, None)
-        df = spark.createDataFrame([(1,)], "i bigint")
+        df = spark.createDataFrame(
+            [(1, '{"a": 1}'), (None, None)], "i bigint, j string"
+        )
         got = df.select(
-            jsonf.json_get_int(F.col("i").cast("string"), "a").alias("v")
+            jsonf.json_get_int("i", "a").alias("int"),
+            jsonf.json_get_str("i", "a").alias("str"),
+            # a bigint is not a JSON document: contains reads it like
+            # invalid JSON (false), never a task failure
+            jsonf.json_contains("i", "a").alias("has"),
+            # the boolean a nested contains (a rewritten `?`) produces
+            jsonf.json_get_int(jsonf.json_contains("j", "a"), "a").alias("nested"),
+            jsonf.json_extract_multi(
+                "i", {"x": ("int", "a"), "y": ("str", "a")}
+            ).alias("m"),
         ).collect()
-        assert got[0].v is None
+        for row in got:
+            assert (row.int, row.str, row.has, row.nested) == (None, None, False, None)
+            assert (row.m.x, row.m.y) == (None, None)
 
     def test_boolean_column_key_rejected(self, spark):
         df = spark.createDataFrame([('["x","y"]', True)], "j string, b boolean")

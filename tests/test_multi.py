@@ -181,6 +181,26 @@ class TestMultiEquivalence:
         )
         assert (r.x, r.has, r.len) == (20, False, 2)
 
+    @pytest.mark.parametrize(
+        "elem, got", [(True, "bool"), (1.0, "float"), (None, "Null"), ("col", "Column")]
+    )
+    def test_path_elements_checked_like_single_getters(self, spark, elem, got):
+        """Bool / float / None / Column elements are refused at build
+        time with the single getters' message, instead of silently
+        reading element 1 (True, 1.0) or failing the task (None)."""
+        if elem == "col":
+            elem = F.col("k")
+        else:
+            with pytest.raises(ValueError) as single:
+                jsonf.json_get_int("j", "a", elem)
+            assert got in str(single.value)
+        with pytest.raises(ValueError) as multi:
+            jsonf.json_extract_multi("j", {"x": ("int", "a", elem)})
+        assert str(multi.value) == (
+            "Unexpected argument type to 'json_get_int' at position 3, "
+            f"expected string or int, got {got}."
+        )
+
 
 class TestVariantTierMulti:
     """tier='variant': zero-hop JVM fused extraction. Agreement with the

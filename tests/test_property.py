@@ -205,7 +205,15 @@ def test_make_find_scalar_matches_find_scalar(value, path, pre, post):
 
 
 @settings(max_examples=200, deadline=None)
-@given(junk=st.text(alphabet='{}[]",:0123456789.eE+- \n\ttrufalsn', max_size=40), path=paths)
+@given(
+    junk=st.one_of(
+        st.text(alphabet='{}[]",:0123456789.eE+- \n\ttrufalsn', max_size=40),
+        st.integers(),
+        st.booleans(),
+        st.floats(),
+    ),
+    path=paths,
+)
 def test_make_find_scalar_never_raises(junk, path):
     core.make_find_scalar(tuple(path))(junk)
     core.make_find_scalar(tuple(path))(None)
@@ -213,6 +221,9 @@ def test_make_find_scalar_never_raises(junk, path):
 
 # -------------------------------------------- batch-vectorized guards
 # (round-17 optimization: kernels._fast_mask + core.make_fast_walk)
+
+import pyarrow as pa  # noqa: E402
+import pyarrow.compute as pc  # noqa: E402
 
 from datafusion_functions_json_spark.functions import kernels  # noqa: E402
 
@@ -305,9 +316,9 @@ def test_batch_mask_duplicate_keys_and_escapes():
 
 
 # ------------------------------------------- per-batch dictionary shortcut
-# (round-18 optimization: kernels._dict_encode + kernels._scatter — the
-# Arrow analog of the reference's dictionary-array evaluation,
-# src/common.rs:310-327)
+# (round-18 optimization: kernels._dict_encode + the pc.take scatter of
+# the Arrow UDF wrappers — the Arrow analog of the reference's
+# dictionary-array evaluation, src/common.rs:310-327)
 
 _ALL_LIST_KERNELS = [
     kernels.kernel_json_get_str,
@@ -325,14 +336,24 @@ _ALL_LIST_KERNELS = [
 ]
 
 
+def _encode(docs, min_rows):
+    """The dictionary shortcut over the Arrow batch a UDF receives."""
+    return kernels._dict_encode(pa.array(docs, type=pa.string()), min_rows=min_rows)
+
+
+def _take(out_d, idx):
+    """The wrappers' scatter: one pc.take of the per-distinct column."""
+    return pc.take(pa.array(out_d), idx).to_pylist()
+
+
 def _dedup_eval(kernel, docs, path, min_rows):
-    pre = kernels._dict_encode(docs, min_rows=min_rows)
+    pre = _encode(docs, min_rows)
     assert pre is not None
     dvals, idx = pre
     # the appended None slot makes the kernel compute the null row itself
     assert dvals[-1] is None
     out_d = kernel(dvals, kernels.repeat_path(path))
-    return list(kernels._scatter(out_d, idx))
+    return _take(out_d, idx)
 
 
 @settings(max_examples=100, deadline=None)
@@ -360,29 +381,29 @@ def test_dict_shortcut_matches_direct(values, path, pre, post):
                 assert a == b, kernel.__name__
     # the struct kernel: member columns scatter independently
     direct = kernels.kernel_json_get(docs, kernels.repeat_path(p))
-    pre_enc = kernels._dict_encode(docs, min_rows=16)
-    dvals, idx = pre_enc
+    dvals, idx = _encode(docs, 16)
     out_d = kernels.kernel_json_get(dvals, kernels.repeat_path(p))
     for f in kernels.UNION_FIELDS:
-        assert direct[f] == list(kernels._scatter(out_d[f], idx)), f
+        assert direct[f] == _take(out_d[f], idx), f
 
 
 def test_dict_shortcut_gates():
     """The shortcut must decline: small batches, mostly-distinct heads,
     and head-fooling sorted inputs (the encode-level 2-rows-per-distinct
     bail); and must accept a genuinely repetitive batch."""
-    rep = ['{"k": %d}' % (i % 5) for i in range(4096)]
-    assert kernels._dict_encode(rep) is not None
+    enc = kernels._dict_encode
+    rep = pa.array(['{"k": %d}' % (i % 5) for i in range(4096)])
+    assert enc(rep) is not None
     # under min_rows
-    assert kernels._dict_encode(rep[:100]) is None
+    assert enc(rep[:100]) is None
     # mostly-distinct head
-    uniq = ['{"k": %d}' % i for i in range(4096)]
-    assert kernels._dict_encode(uniq) is None
+    uniq = pa.array(['{"k": %d}' % i for i in range(4096)])
+    assert enc(uniq) is None
     # repetitive head, distinct tail: caught by the full-encode gate
-    sneaky = ['{"k": 0}'] * 300 + ['{"k": %d}' % i for i in range(3796)]
-    assert kernels._dict_encode(sneaky) is None
+    sneaky = pa.array(['{"k": 0}'] * 300 + ['{"k": %d}' % i for i in range(3796)])
+    assert enc(sneaky) is None
     # non-string batches decline instead of raising
-    assert kernels._dict_encode([1, 2, 3] * 2000) is None
+    assert enc(pa.array([1, 2, 3] * 2000)) is None
 
 
 def test_dict_shortcut_all_null_batch():

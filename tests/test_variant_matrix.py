@@ -42,11 +42,6 @@ from pyspark.sql import functions as F
 import datafusion_functions_json_spark as jsonf
 from datafusion_functions_json_spark.functions import native
 
-pytestmark = pytest.mark.skipif(
-    not hasattr(F, "try_variant_get"),
-    reason="variant tier needs Spark 4 (try_variant_get)",
-)
-
 # FIXTURES.md §1 rows (path 'foo') + envelope probes (path 'k') chosen
 # to light up every documented divergence class at least once
 MATRIX_ROWS = [
