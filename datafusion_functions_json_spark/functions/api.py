@@ -136,7 +136,7 @@ def _invoke(fn_key: str, json, path: tuple) -> Column:
         root, inner_path = prov
         return udfs.literal_path_udf(fn_key, inner_path + lit_path)(root)
     if key_col is not None:
-        return udfs.column_path_udf(fn_key)(text_col, key_col)
+        return udfs.path_args_udf(fn_key)(text_col, key_col)
     return udfs.literal_path_udf(fn_key, lit_path)(text_col)
 
 
@@ -152,26 +152,24 @@ def json_get(json, *path):
     text_col, prov = _coerce_json_arg(json)
     if prov is not None and lit_path is not None:
         root, inner_path = prov
-        raw = udfs.literal_path_udf("json_get", inner_path + lit_path)(root)
+        full = inner_path + lit_path
         return JsonColumn(
-            union_mod.mask_null_arm(raw), root=root, path=inner_path + lit_path
+            udfs.literal_path_udf("json_get", full)(root), root=root, path=full
         )
     if key_col is not None:
-        raw = udfs.column_path_udf("json_get")(text_col, key_col)
         # no LITERAL provenance (un-nesting requires literal paths) but
         # cast elision has no such guard — keep enough to rewrite
         # .cast('bigint') into json_get_int(text, key_col)
         return JsonColumn(
-            union_mod.mask_null_arm(raw),
+            udfs.path_args_udf("json_get")(text_col, key_col),
             root=None,
             path=None,
             cast_root=text_col,
             cast_path=tuple(path),
         )
-    raw = udfs.literal_path_udf("json_get", lit_path)(text_col)
     root = text_col if not isinstance(json, JsonColumn) else None
     return JsonColumn(
-        union_mod.mask_null_arm(raw),
+        udfs.literal_path_udf("json_get", lit_path)(text_col),
         root=root,
         path=lit_path if root is not None else None,
     )

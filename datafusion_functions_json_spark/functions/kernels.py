@@ -506,9 +506,7 @@ def kernel_json_union_to_text(
     for tid, b, i, f, st, ar, ob in zip(
         type_ids, bools, ints, floats, strs, arrs, objs
     ):
-        # NaN guard: a struct column with NULLs arrives from Arrow→pandas
-        # with numeric members as float dtype (None => NaN).
-        if tid is None or tid != tid or tid == 0:
+        if tid is None or tid == 0:
             out.append(None)
         elif tid == 1:
             out.append("true" if b else "false")

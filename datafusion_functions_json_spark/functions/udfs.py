@@ -1,30 +1,34 @@
-"""Arrow-UDF construction over the kernels.
+"""The one Arrow adapter between Spark and the kernels.
 
-Two shapes, mirroring the reference's kernel dispatch (reference:
+Every exact-tier JSON function — on the Column API and on the SQL
+surface that :func:`~..register.register_all` registers — is a Spark 4.1
+``arrow_udf`` (``pyarrow.Array`` in, ``pyarrow.Array`` out) built here,
+and every one runs the same batch body (:func:`_batch_body`). Two
+builders, mirroring the reference's kernel dispatch (reference:
 src/common.rs:159-182 dispatches (json array|scalar) × (path
 scalars|array)):
 
-* **literal path** (the dominant case): the path is closed over at plan
-  time, so ONLY the JSON column crosses the JVM→Python Arrow boundary.
-  UDF objects are cached per (function, path) so repeated plan references
-  reuse one PythonUDF expression.
-* **column path**: a single path element comes from a column (the
-  reference allows exactly one column path element and only alone —
-  reference: src/common.rs:129-133); both arrays cross the boundary and
-  the path tuple is built per row. A NULL key in the column yields a null
-  result, not an error (reference: src/common.rs:118-127 JsonPath::None).
+* :func:`literal_path_udf` (the Column API's dominant case): the path is
+  closed over at plan time, so ONLY the JSON column crosses the
+  JVM→Python Arrow boundary. UDF objects are cached per (function, path)
+  so repeated plan references reuse one PythonUDF expression.
+* :func:`path_args_udf`: the path elements arrive as argument columns,
+  ``(json, *keys)`` — every registered SQL function, and a Column-API
+  column path. It applies the reference's argument checks
+  (:func:`_check_path_args`), continues a lookup through a union-struct
+  first argument's container members, and runs the literal-path body
+  when every key is constant and non-null in the batch. Otherwise it
+  builds the path per row; a NULL key yields a null result, not an error
+  (reference: src/common.rs:118-127 JsonPath::None).
 
-Since round 18 the wrappers are true **Arrow UDFs** (Spark 4.1
-``arrow_udf``: ``pyarrow.Array`` in, ``pyarrow.Array`` out) instead of
-pandas UDFs — the batch never materializes as a pandas object Series on
-either side of the boundary (guide §4.2: hand whole Arrow batches to the
-kernel layer), and outputs are built as explicitly-typed Arrow arrays
-(``from_pandas=True`` keeps the old pandas NaN→null coercion for float
-outputs bit-for-bit). On batches whose documents repeat, the per-batch
-dictionary shortcut (:func:`kernels._dict_encode` — the Arrow analog of
-the reference's dictionary-array evaluation, src/common.rs:310-327) runs
-the kernel on the DISTINCT documents only and scatters results back with
-one ``pc.take`` per output column.
+On batches whose documents repeat, the literal-path body takes the
+per-batch dictionary shortcut (:func:`kernels._dict_encode` — the Arrow
+analog of the reference's dictionary-array evaluation,
+src/common.rs:310-327): the kernel runs on the DISTINCT documents only
+and one ``pc.take`` scatters the results back. ``json_get``'s null arm
+becomes a whole-struct NULL in :func:`_union_struct`, so ``IS NULL``
+agrees with the reference's union null on both surfaces (reference:
+tests/main.rs:1612-1729).
 
 All UDFs are deterministic (never call ``asNondeterministic``) so Catalyst
 remains free to push/collapse projections containing them — the Spark
@@ -37,15 +41,20 @@ from __future__ import annotations
 import itertools
 from functools import lru_cache
 
-import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import functions as F
 
 from . import kernels
 from .kernels import UNION_FIELDS
 
-__all__ = ["literal_path_udf", "column_path_udf", "union_to_text_udf", "RETURN_TYPES"]
+__all__ = [
+    "literal_path_udf",
+    "path_args_udf",
+    "union_to_text_udf",
+    "union_is_null_udf",
+    "RETURN_TYPES",
+]
 
 # Return types per function key. json_length returns LongType — Spark has
 # no unsigned (reference returns UInt64, SURVEY.md §2.1 #10).
@@ -84,18 +93,6 @@ _KERNELS = {
     "json_is_null_fused": kernels.kernel_json_is_null_fused,
 }
 
-_STRUCT_FNS = {"json_get"}
-
-
-def _wrap_result(fn_key: str, out):
-    """Pandas wrapping of a kernel result — kept for the SQL-surface
-    UDFs (register.py), which bridge through pandas for the nested
-    union-struct argument handling."""
-    if fn_key in _STRUCT_FNS:
-        return pd.DataFrame({name: out[name] for name in UNION_FIELDS})
-    return pd.Series(out, dtype=object)
-
-
 # Arrow output type per function key — matches RETURN_TYPES exactly.
 _PA_TYPES = {
     "json_get_str": pa.string(),
@@ -123,27 +120,123 @@ _UNION_PA_TYPES = (
     pa.string(),
 )
 
+# DataFusion-style names for the argument-type error message (reference:
+# src/common.rs:106-141 rejects non-string/int path args at plan time with
+# the DataType debug name; tests/main.rs:291-298 pins the Null wording).
+_DF_TYPE_NAMES = {
+    "null": "Null",
+    "bool": "Boolean",
+    "float": "Float32",
+    "double": "Float64",
+    "date32[day]": "Date32",
+    "timestamp[us]": "Timestamp(Microsecond, None)",
+}
+
+
+def _check_path_args(fn_key, key_cols):
+    """Reference arg validation, applied per Arrow batch.
+
+    * A path argument whose Arrow type is ``null`` (Spark's untyped NULL
+      literal, VOID) or any non-string/int type is rejected with the
+      reference's planning message (reference: src/common.rs:106-141,
+      tests/main.rs:291-298). A *typed* null — ``cast(null as string)`` or
+      a nullable column — passes, and null values yield null rows, exactly
+      like the reference's ``ScalarValue::Utf8(None) => JsonPath::None``.
+    * With more than one path element, any argument that is demonstrably a
+      per-row column (≥2 distinct values, or any null, in the batch —
+      a literal is always constant and non-null) raises the reference's
+      execution error (reference: src/common.rs:129-133,
+      tests/main.rs:1095-1103). A column that is constant within every
+      batch is indistinguishable from a literal here and passes — the one
+      remaining (documented) delta on the SQL surface.
+    """
+    for i, k in enumerate(key_cols):
+        t = k.type
+        if not (
+            pa.types.is_string(t)
+            or pa.types.is_large_string(t)
+            or (pa.types.is_integer(t) and not pa.types.is_boolean(t))
+        ):
+            name = _DF_TYPE_NAMES.get(str(t), str(t).capitalize())
+            raise ValueError(
+                f"Unexpected argument type to '{fn_key}' at position {i + 2}, "
+                f"expected string or int, got {name}."
+            )
+    if len(key_cols) > 1:
+        for k in key_cols:
+            if len(k) > 1 and (k.null_count > 0 or len(pc.unique(k)) > 1):
+                raise ValueError(
+                    "More than 1 path element is not supported when "
+                    "querying JSON using an array."
+                )
+
 
 def _pa_col(values, pa_type):
     """Typed Arrow array from kernel output. ``from_pandas=True`` keeps
-    the pandas-UDF era's NaN→null coercion (a float NaN from
-    parse_float_like_rust must stay SQL NULL, exactly as pandas object
-    Series produced)."""
+    a float NaN from parse_float_like_rust as SQL NULL."""
     return pa.array(values, type=pa_type, from_pandas=True)
 
 
 def _union_struct(out, idx=None):
     """Assemble the json_get union struct from the kernel's 7 member
-    lists; ``idx`` (from the dictionary shortcut) scatters each typed
-    member column via one C-speed take."""
-    import pyarrow.compute as pc
-
+    lists. Null-arm rows (type_id 0: JSON null, lookup miss, big int)
+    become a WHOLE-STRUCT NULL — the Spark form of the reference's
+    dictionary null-masking (reference: src/common.rs:587-598). ``idx``
+    (from the dictionary shortcut) scatters the distinct rows back with
+    one take."""
     children = [
         _pa_col(out[name], t) for name, t in zip(UNION_FIELDS, _UNION_PA_TYPES)
     ]
-    if idx is not None:
-        children = [pc.take(c, idx) for c in children]
-    return pa.StructArray.from_arrays(children, names=list(UNION_FIELDS))
+    struct = pa.StructArray.from_arrays(
+        children, names=list(UNION_FIELDS), mask=pc.equal(children[0], 0)
+    )
+    return struct if idx is None else pc.take(struct, idx)
+
+
+def _to_arrow(fn_key):
+    """``build(kernel_output, idx=None)`` → the Arrow result of
+    ``fn_key``, scattered through ``idx`` when given."""
+    if fn_key == "json_get":
+        return _union_struct
+    pa_type = _PA_TYPES[fn_key]
+    pa_col = _pa_col
+
+    def build(out, idx=None):
+        col = pa_col(out, pa_type)
+        return col if idx is None else pc.take(col, idx)
+
+    return build
+
+
+def _members(u):
+    """A union struct's children by name, each under the parent
+    validity mask (``flatten``): Arrow struct children may hold values
+    under a null parent slot."""
+    if isinstance(u, pa.ChunkedArray):
+        u = u.combine_chunks()
+    return dict(zip([f.name for f in u.type], u.flatten()))
+
+
+def _batch_body(fn_key):
+    """``body(js, path)``, the batch body every JSON UDF runs. ``path``
+    is a tuple constant over the batch (the dictionary shortcut
+    applies) or a list of per-row path tuples."""
+    kernel = _KERNELS[fn_key]
+    build = _to_arrow(fn_key)
+    # closure-captured for the foreign-cwd contract (like multi.py's
+    # fast_mask): the UDF body must not reach package modules by name
+    dict_encode = kernels._dict_encode
+
+    def body(js, path):
+        if type(path) is tuple:
+            pre = dict_encode(js)
+            if pre is not None:
+                dvals, idx = pre
+                return build(kernel(dvals, itertools.repeat(path)), idx)
+            path = itertools.repeat(path)
+        return build(kernel(js.to_pylist(), path))
+
+    return body
 
 
 @lru_cache(maxsize=512)
@@ -155,103 +248,40 @@ def literal_path_udf(fn_key: str, path: tuple):
     collapse (analog of the reference's singleton UDF instances,
     reference: src/common_macros.rs:17-49).
     """
-    kernel = _KERNELS[fn_key]
-    ret = RETURN_TYPES[fn_key]
-    # closure-captured for the foreign-cwd contract (like multi.py's
-    # fast_mask): the UDF body must not import package modules
-    dict_encode = kernels._dict_encode
-    pa_col = _pa_col
+    body = _batch_body(fn_key)
 
-    if fn_key in _STRUCT_FNS:
-        union_struct = _union_struct
-
-        def fn(js: pa.Array) -> pa.Array:
-            pre = dict_encode(js)
-            if pre is None:
-                return union_struct(
-                    kernel(js.to_pylist(), itertools.repeat(path))
-                )
-            dvals, idx = pre
-            return union_struct(
-                kernel(dvals, itertools.repeat(path)), idx
-            )
-
-    else:
-        pa_type = _PA_TYPES[fn_key]
-
-        def fn(js: pa.Array) -> pa.Array:
-            import pyarrow.compute as pc
-
-            pre = dict_encode(js)
-            if pre is None:
-                return pa_col(
-                    kernel(js.to_pylist(), itertools.repeat(path)), pa_type
-                )
-            dvals, idx = pre
-            out_d = kernel(dvals, itertools.repeat(path))
-            return pc.take(pa_col(out_d, pa_type), idx)
+    def fn(js: pa.Array) -> pa.Array:
+        return body(js, path)
 
     fn.__name__ = fn_key
-    return F.arrow_udf(fn, ret)
-
-
-def _key_to_elem(v):
-    """Normalize one per-row key value from a column path: numpy ints →
-    int, None/NaN → None (null key ⇒ null result, reference:
-    src/common.rs:118-127). Booleans and datetimes are REJECTED like
-    the SQL surface and the reference's plan check — int()-coercing
-    them would silently turn ``True`` into array index 1 (defeating
-    core's bool guard, which fires on the path element, not here) and
-    a timestamp into a nanosecond 'index'."""
-    if v is None or v != v:  # NaN check for float keys from pandas
-        return None
-    if isinstance(v, str):
-        return v
-    if isinstance(v, (bool, np.bool_)):
-        raise ValueError(
-            "Unexpected argument type at position 2, expected string or "
-            "int, got Boolean."
-        )
-    if not isinstance(v, (int, float, np.integer, np.floating)):
-        raise ValueError(
-            "Unexpected argument type at position 2, expected string or "
-            f"int, got {type(v).__name__}."
-        )
-    return int(v)
+    return F.arrow_udf(fn, RETURN_TYPES[fn_key])
 
 
 @lru_cache(maxsize=64)
-def column_path_udf(fn_key: str):
-    """Arrow UDF computing ``fn_key`` with a single column-valued path
-    element (reference: src/common.rs:106-110 Array path)."""
-    kernel = _KERNELS[fn_key]
-    ret = RETURN_TYPES[fn_key]
-    pa_col = _pa_col
+def path_args_udf(fn_key: str):
+    """Arrow UDF ``(json, *keys)`` computing ``fn_key`` with the path
+    elements as argument columns (reference: src/common.rs:106-110).
 
-    def _paths(keys):
-        return [
-            ((e,) if (e := _key_to_elem(k)) is not None else (None,))
-            for k in keys
-        ]
+    ``json`` is JSON text or a union struct (a nested
+    ``json_get(json_get(j, 'a'), 'b')`` in SQL); a struct continues the
+    lookup through its container members, like the reference's
+    ``nested_json_array`` (reference: src/common_union.rs:49-57) —
+    scalar members are NULL, so the nested lookup misses."""
+    body = _batch_body(fn_key)
+    check = _check_path_args
+    members = _members
 
-    if fn_key in _STRUCT_FNS:
-        union_struct = _union_struct
-
-        def fn(js: pa.Array, keys: pa.Array) -> pa.Array:
-            return union_struct(
-                kernel(js.to_pylist(), _paths(keys.to_pylist()))
-            )
-
-    else:
-        pa_type = _PA_TYPES[fn_key]
-
-        def fn(js: pa.Array, keys: pa.Array) -> pa.Array:
-            return pa_col(
-                kernel(js.to_pylist(), _paths(keys.to_pylist())), pa_type
-            )
+    def fn(js: pa.Array, *keys: pa.Array) -> pa.Array:
+        check(fn_key, keys)
+        if pa.types.is_struct(js.type):
+            m = members(js)
+            js = pc.coalesce(m["array"], m["object"])
+        if all(k.null_count == 0 and len(pc.unique(k)) == 1 for k in keys):
+            return body(js, tuple(k[0].as_py() for k in keys))
+        return body(js, list(zip(*(k.to_pylist() for k in keys))))
 
     fn.__name__ = fn_key
-    return F.arrow_udf(fn, ret)
+    return F.arrow_udf(fn, RETURN_TYPES[fn_key])
 
 
 @lru_cache(maxsize=1)
@@ -263,12 +293,27 @@ def union_to_text_udf():
     (``1e10`` → '1.0E10' in Spark vs '10000000000.0' canonical)."""
     kernel = kernels.kernel_json_union_to_text
     pa_col = _pa_col
+    members = _members
 
     def fn(u: pa.Array) -> pa.Array:
-        if isinstance(u, pa.ChunkedArray):
-            u = u.combine_chunks()
-        cols = [u.field(name).to_pylist() for name in UNION_FIELDS]
-        return pa_col(kernel(*cols), pa.string())
+        m = members(u)
+        return pa_col(
+            kernel(*(m[name].to_pylist() for name in UNION_FIELDS)), pa.string()
+        )
 
     fn.__name__ = "json_union_to_text"
     return F.arrow_udf(fn, "string")
+
+
+@lru_cache(maxsize=1)
+def union_is_null_udf():
+    """SQL-surface json_is_null over the union struct: true for a NULL
+    struct and for the null arm (reference: tests/main.rs:1612-1729).
+    The Column API's twin is the JVM expression ``union.json_is_null``."""
+    members = _members
+
+    def fn(u: pa.Array) -> pa.Array:
+        return pc.fill_null(pc.equal(members(u)["type_id"], 0), True)
+
+    fn.__name__ = "json_is_null"
+    return F.arrow_udf(fn, "boolean")

@@ -13,11 +13,13 @@ representation is a tagged struct (SURVEY.md §7.2):
 type_id values match the reference's union type-id constants (reference:
 src/common_union.rs:176-182). The null arm (JSON null AND lookup-miss —
 both collapse, reference: src/common_union.rs:53) is normalized to a
-WHOLE-STRUCT NULL at the Column-API layer so that ``IS NULL`` behaves like
-the reference's union-null (reference: tests/main.rs:1612-1729), matching
-the dictionary null-masking intent of src/common.rs:587-598. Struct rows
-with ``type_id = 0`` (possible via the SQL-registered surface, where no
-JVM-side rewrap happens) are treated as null-arm by every consumer here.
+WHOLE-STRUCT NULL by the Arrow adapter that builds the struct
+(``functions.udfs._union_struct``, for the Column API and the SQL surface
+alike) so that ``IS NULL`` behaves like the reference's union-null
+(reference: tests/main.rs:1612-1729), matching the dictionary
+null-masking intent of src/common.rs:587-598. A present struct with
+``type_id = 0`` or NULL (one built by hand, or read back from storage) is
+treated as null-arm by every consumer here.
 
 This struct round-trips through Parquet, shuffles, and Arrow batches in
 every Spark version — no custom datasource or Catalyst type needed.
@@ -39,7 +41,6 @@ __all__ = [
     "TYPE_ID_STR",
     "TYPE_ID_ARRAY",
     "TYPE_ID_OBJECT",
-    "mask_null_arm",
     "union_container_text",
     "json_is_null",
     "format_union_value",
@@ -69,17 +70,6 @@ UNION_DDL = (
     "struct<type_id:tinyint,bool:boolean,int:bigint,float:double,"
     "str:string,array:string,object:string>"
 )
-
-
-def mask_null_arm(u: Column) -> Column:
-    """Normalize null-arm rows (type_id=0) to a whole-struct NULL — the
-    Spark equivalent of the reference's dictionary null-masking
-    (reference: src/common.rs:587-598), giving ``IS NULL`` parity with the
-    union's null member (reference: tests/main.rs:1710-1729).
-
-    JVM-side CASE; cheap, stays inside whole-stage codegen.
-    """
-    return F.when(u.getField("type_id") == TYPE_ID_NULL, F.lit(None).cast(UNION_DDL)).otherwise(u)
 
 
 def union_container_text(u: Column) -> Column:

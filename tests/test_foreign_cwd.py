@@ -30,12 +30,21 @@ SCRIPT = textwrap.dedent(
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    # exact-tier pandas-UDF kernel (kernels/core/udfs by value)
+    # exact-tier Arrow-UDF kernel (kernels/core/udfs by value)
     df = spark.createDataFrame(
         [('{{"k": 7}}',), ("{{",), (None,)], ["j"]
     )
     got = [r.k for r in df.select(jsonf.json_get_int("j", "k").alias("k")).collect()]
     assert got == [7, None, None], got
+    # the registered SQL surface (register/udfs closures by value)
+    jsonf.register_all(spark)
+    df.createOrReplaceTempView("fc_sql")
+    got = [tuple(r) for r in spark.sql(
+        "select json_union_to_text(json_get(j, 'k')), "
+        "json_is_null(json_get(j, 'k')), "
+        "json_union_to_text(json_from_scalar(length(j))) from fc_sql"
+    ).collect()]
+    assert got == [("7", False, "8"), (None, True, "1"), (None, True, None)], got
     # fused multi (its own UDF closure)
     u = df.select(jsonf.json_extract_multi("j", {{"k": ("int", "k")}}).alias("u"))
     assert [r.u.k for r in u.collect()] == [7, None, None]

@@ -345,6 +345,20 @@ class TestErrorParity:
         with pytest.raises(ValueError, match="expected string or int"):
             jsonf.json_get("j", 1.5)
 
+    def test_double_column_key_rejected(self, spark):
+        # the SQL surface's and the reference's argument check: a double
+        # key is an error, never an index truncated from 1.7 to 1
+        df = spark.createDataFrame([('["x","y"]', 1.7)], "j string, d double")
+        with pytest.raises(Exception, match="json_get_str' at position 2, expected string or int, got Float64"):
+            df.select(jsonf.json_get_str("j", F.col("d"))).collect()
+
+    def test_untyped_null_column_key_rejected(self, spark):
+        # reference: tests/main.rs:291-298 — an untyped NULL path
+        # argument is rejected, on the Column API as in SQL
+        df = spark.createDataFrame([('{"a": 1}',)], "j string")
+        with pytest.raises(Exception, match="json_get_int' at position 2, expected string or int, got Null"):
+            df.select(jsonf.json_get_int("j", F.lit(None))).collect()
+
     def test_union_equals_raises_without_cast(self, spark, test_df):
         # reference: tests/main.rs test_json_get_equals — comparing the
         # raw union to a string is a plan error; ::string works (cast

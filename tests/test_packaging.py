@@ -82,3 +82,26 @@ def test_package_imports_without_repo_root_side_effects():
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "clean" in out.stdout
+
+
+def test_json_functions_have_no_pandas_bridge():
+    # both JSON surfaces cross the JVM boundary through the one Arrow
+    # adapter (functions/udfs.py); a pandas import or pandas_udf here
+    # would reopen a second, lossy path (pandas widens an int member to
+    # float64 when its batch holds a null)
+    import ast
+
+    for rel in ("functions/core.py", "functions/kernels.py",
+                "functions/udfs.py", "functions/multi.py",
+                "functions/api.py", "register.py"):
+        tree = ast.parse(open(os.path.join(REPO, PKG, rel)).read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                mods = [node.module or ""]
+            else:
+                mods = []
+            assert not any(m.split(".")[0] == "pandas" for m in mods), rel
+            name = getattr(node, "attr", None) or getattr(node, "id", None)
+            assert name != "pandas_udf", (rel, node.lineno)

@@ -1,7 +1,12 @@
 """SQL-registered surface (reference: src/lib.rs:69-96 register_all) —
 named functions replace the ->/->>/? operators (SURVEY.md §2.2)."""
 
+import json
+
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 import datafusion_functions_json_spark as jsonf
 
@@ -98,6 +103,107 @@ class TestSqlSurface:
             spark.sql("select json_get_int(j, 'a', 'b', 0L) v from deep").collect()[0].v
             == 9
         )
+
+
+_BIG = st.integers(min_value=10**18, max_value=2**63 - 1)  # 19 digits
+_SCALARS = st.one_of(
+    _BIG,
+    st.integers(min_value=2**63, max_value=10**20),  # beyond i64
+    st.integers(min_value=-(10**6), max_value=10**6),
+    st.floats(allow_nan=False, allow_infinity=False),
+    st.text(max_size=6),
+    st.booleans(),
+    st.none(),
+)
+_VALUES = st.recursive(
+    _SCALARS,
+    lambda c: st.lists(c, max_size=3)
+    | st.dictionaries(st.sampled_from("pqr"), c, max_size=3),
+    max_leaves=6,
+)
+_DOCS = st.one_of(
+    st.dictionaries(st.sampled_from("pqr"), _VALUES, max_size=3).map(json.dumps),
+    st.sampled_from(["not json", '{"p": ', ""]),
+    st.none(),
+)
+_ROWS = st.lists(
+    st.tuples(
+        _DOCS,
+        st.sampled_from(["p", "q", "r", None]),
+        st.one_of(st.none(), _BIG, st.integers(-5, 5)),
+        st.one_of(st.none(), st.text(max_size=4)),
+    ),
+    max_size=25,
+)
+
+
+class TestSqlEqualsColumnApi:
+    """One generated corpus through the registered SQL functions and
+    through the Column API gives equal rows, for every function. One
+    partition, so mixed member types share an Arrow batch; the fixed
+    head rows put a 19-digit int next to a string and a null."""
+
+    _HEAD = [
+        ('{"p": 1577992117811021379, "q": {"r": [1, 2]}}', "p", 1577992117811021379, "s"),
+        ('{"p": "x", "q": {"r": 1577992117811021379}}', "q", None, None),
+        ('{"p": null, "q": [1]}', None, -3, "t"),
+        (None, "p", None, None),
+    ]
+
+    _SQL = """
+        select json_get(j, 'p'), json_get_str(j, 'p'), json_get_int(j, 'p'),
+               json_get_float(j, 'p'),
+               json_get_bool(j, 'p'), json_get_json(j, 'p'),
+               json_get_array(j, 'p'), json_as_text(j, 'p'),
+               json_contains(j, 'p'), json_length(j), json_length(j, 'q'),
+               json_object_keys(j), json_object_keys(j, 'q'),
+               json_get(j, k), json_get_int(j, k), json_as_text(j, k),
+               json_get(json_get(j, 'q'), 'r'),
+               json_union_to_text(json_get(json_get(j, 'q'), 'r')),
+               json_union_to_text(json_get(j, 'p')),
+               json_is_null(json_get(j, 'p')),
+               json_from_scalar(n), json_from_scalar(s),
+               json_union_to_text(json_from_scalar(n)),
+               json_is_null(json_from_scalar(s)),
+               json_get(j, 'p').int
+        from sql_api_eq order by id
+    """
+
+    @staticmethod
+    def _api(df):
+        j, k = "j", F.col("k")
+        return df.orderBy("id").select(
+            jsonf.json_get(j, "p"), jsonf.json_get_str(j, "p"),
+            jsonf.json_get_int(j, "p"), jsonf.json_get_float(j, "p"), jsonf.json_get_bool(j, "p"),
+            jsonf.json_get_json(j, "p"), jsonf.json_get_array(j, "p"),
+            jsonf.json_as_text(j, "p"), jsonf.json_contains(j, "p"),
+            jsonf.json_length(j), jsonf.json_length(j, "q"),
+            jsonf.json_object_keys(j), jsonf.json_object_keys(j, "q"),
+            jsonf.json_get(j, k), jsonf.json_get_int(j, k),
+            jsonf.json_as_text(j, k),
+            jsonf.json_get(jsonf.json_get(j, "q"), "r"),
+            jsonf.json_union_to_text(jsonf.json_get(jsonf.json_get(j, "q"), "r")),
+            jsonf.json_union_to_text(jsonf.json_get(j, "p")),
+            jsonf.json_is_null(jsonf.json_get(j, "p")),
+            jsonf.json_from_scalar("n"), jsonf.json_from_scalar("s"),
+            jsonf.json_union_to_text(jsonf.json_from_scalar("n")),
+            jsonf.json_is_null(jsonf.json_from_scalar("s")),
+        )
+
+    @settings(max_examples=12, deadline=None)
+    @given(rows=_ROWS)
+    def test_same_rows_on_both_surfaces(self, spark, rows):
+        data = [(i, *r) for i, r in enumerate(self._HEAD + rows)]
+        df = spark.createDataFrame(
+            data, "id int, j string, k string, n bigint, s string"
+        ).coalesce(1)
+        df.createOrReplaceTempView("sql_api_eq")
+        sql_rows = [tuple(r) for r in spark.sql(self._SQL).collect()]
+        api_rows = [tuple(r) for r in self._api(df).collect()]
+        assert [r[:-1] for r in sql_rows] == api_rows
+        # SQL's `.int` (a JVM field read) against the Column API struct
+        assert [r[-1] for r in sql_rows] == [r[0] and r[0].int for r in api_rows]
+        assert sql_rows[0][-1] == 1577992117811021379
 
 
 class TestSqlPlanErrors:

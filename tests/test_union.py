@@ -88,6 +88,29 @@ class TestUnionToText:
             == "10000000000.0"
         )
 
+    def test_reads_children_under_parent_validity(self, spark):
+        # Arrow struct children may hold values under a null parent slot;
+        # the wrapper must read each member through the parent mask
+        import pyarrow as pa
+
+        from datafusion_functions_json_spark.functions import udfs
+
+        u = pa.StructArray.from_arrays(
+            [
+                pa.array([2, 4, 2, 6], pa.int8()),
+                pa.array([None] * 4, pa.bool_()),
+                pa.array([7, None, 9, None], pa.int64()),
+                pa.array([None] * 4, pa.float64()),
+                pa.array([None, "s", None, None], pa.string()),
+                pa.array([None] * 4, pa.string()),
+                pa.array([None, None, None, '{"a": 1}'], pa.string()),
+            ],
+            names=["type_id", "bool", "int", "float", "str", "array", "object"],
+            mask=pa.array([False, True, False, True]),
+        )
+        out = udfs.union_to_text_udf().func(u)
+        assert out.to_pylist() == ["7", None, "9", None]
+
 
 class TestIsNull:
     def test_three_null_sources(self, spark):
@@ -110,7 +133,7 @@ class TestNullMaskingInvariant:
     (reference: tests/main.rs:1781-1845 check_for_null_dictionary_values:
     no non-null key may point to a null value). Spark analog: a json_get
     result row is either a WHOLE-STRUCT NULL (null arm, masked by
-    mask_null_arm) or carries type_id 1-6 with exactly the active member
+    udfs._union_struct) or carries type_id 1-6 with exactly the active member
     populated — never a present struct with type_id 0/NULL, never a
     populated inactive member."""
 
